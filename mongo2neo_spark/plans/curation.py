@@ -91,22 +91,24 @@ def run_curation(
     }
     if cfg.mixture_rates is not None:
         paths["sampled"] = f"{out_dir}/sampled"
-    _stage_profile(spark, input_source, paths, cfg, resume)
-    _stage_exact(spark, paths, cfg, resume)
-    _stage_neardup(spark, paths, cfg, resume)
-    _stage_filter(spark, paths, cfg, resume)
+    # one lineage read per run: a stage's keys only grow through its own
+    # record, which runs after the stage has checked them
+    done = lin.completed_keys(spark, out_dir) if resume else {}
+    _stage_profile(spark, input_source, paths, cfg, done.get("profile", set()))
+    _stage_exact(spark, paths, cfg, done.get("exact"))
+    _stage_neardup(spark, paths, cfg, done.get("neardup"))
+    _stage_filter(spark, paths, cfg, done.get("filter"))
     if cfg.mixture_rates is not None:
-        _stage_sample(spark, paths, cfg, resume)
+        _stage_sample(spark, paths, cfg, done.get("sample"))
     return paths
 
 
 # ---------------------------------------------------------------------------
 # stage 1: text profile (bucket-granular resume)
 # ---------------------------------------------------------------------------
-def _stage_profile(spark, input_source, paths, cfg, resume) -> None:
+def _stage_profile(spark, input_source, paths, cfg, done) -> None:
     stage = "profile"
     out_root = paths["lineage"].rsplit("/", 1)[0]
-    done = set(lin.completed_keys(spark, out_root, stage)) if resume else set()
     all_buckets = {str(b) for b in range(cfg.n_buckets)}
     todo = sorted(all_buckets - done, key=int)
     if not todo:
@@ -146,7 +148,7 @@ def _stage_profile(spark, input_source, paths, cfg, resume) -> None:
 # ---------------------------------------------------------------------------
 # stages 2-4: global stages (whole-stage lineage, resume = skip)
 # ---------------------------------------------------------------------------
-def _global_stage(spark, paths, cfg, resume, stage, produce,
+def _global_stage(spark, paths, cfg, done, stage, produce,
                   partition_by=("bucket",)) -> None:
     """Shared shape: read -> transform -> observed write -> lineage row.
 
@@ -156,7 +158,7 @@ def _global_stage(spark, paths, cfg, resume, stage, produce,
     entry's input_rows slot, so shrinkage is never silent.  ``n_in`` is
     a parquet-metadata count of the previous stage's table — cheap."""
     out_root = paths["lineage"].rsplit("/", 1)[0]
-    if resume and lin.completed_keys(spark, out_root, stage):
+    if done:
         return
     with lin.StageTimer() as t:
         df, n_in = produce()
@@ -179,15 +181,15 @@ _STAGE_OUT = {"exact": "exact", "neardup": "neardup", "filter": "curated",
               "sample": "sampled"}
 
 
-def _stage_exact(spark, paths, cfg, resume) -> None:
+def _stage_exact(spark, paths, cfg, done) -> None:
     def produce():
         prof = spark.read.parquet(paths["profiled"])
         return dedup_mod.exact_dedup(prof, "text", "doc_id"), prof.count()
 
-    _global_stage(spark, paths, cfg, resume, "exact", produce)
+    _global_stage(spark, paths, cfg, done, "exact", produce)
 
 
-def _stage_neardup(spark, paths, cfg, resume) -> None:
+def _stage_neardup(spark, paths, cfg, done) -> None:
     def produce():
         ex = spark.read.parquet(paths["exact"])
         comp = dedup_mod.minhash_dedup_components(
@@ -200,10 +202,10 @@ def _stage_neardup(spark, paths, cfg, resume) -> None:
         kept = ex.join(survivors.select("doc_id"), "doc_id", "left_semi")
         return kept, ex.count()
 
-    _global_stage(spark, paths, cfg, resume, "neardup", produce)
+    _global_stage(spark, paths, cfg, done, "neardup", produce)
 
 
-def _stage_filter(spark, paths, cfg, resume) -> None:
+def _stage_filter(spark, paths, cfg, done) -> None:
     def produce():
         nd = spark.read.parquet(paths["neardup"])
         kept = nd.filter(
@@ -220,10 +222,10 @@ def _stage_filter(spark, paths, cfg, resume) -> None:
             kept = kept.join(rep_keep, "doc_id", "left_semi")
         return kept, nd.count()
 
-    _global_stage(spark, paths, cfg, resume, "filter", produce)
+    _global_stage(spark, paths, cfg, done, "filter", produce)
 
 
-def _stage_sample(spark, paths, cfg, resume) -> None:
+def _stage_sample(spark, paths, cfg, done) -> None:
     def produce():
         cur = spark.read.parquet(paths["curated"])
         kept = sampling_mod.mixture_sample(
@@ -244,7 +246,7 @@ def _stage_sample(spark, paths, cfg, resume) -> None:
         )
         return kept, cur.count()
 
-    _global_stage(spark, paths, cfg, resume, "sample", produce,
+    _global_stage(spark, paths, cfg, done, "sample", produce,
                   partition_by=())
 
 

@@ -8,6 +8,10 @@ materialize stages) is *done* when a lineage row exists for its
 (stage, partition_key); resume anti-joins the work list against the
 recorded keys and recomputes only the remainder.
 
+A resumable run reads lineage ONCE, at its start (``completed_keys``
+returns every stage's keys; a fresh directory costs no Spark job), and
+each ``record`` call appends exactly one part file built on the driver.
+
 Checksums are order-insensitive content hashes — sum(xxhash64(row)) —
 so a resumed run can be diffed against a fresh run bit-for-bit.
 At design scale (10^12 turns → ~10^6-10^7 tasks/stage) lineage is
@@ -18,7 +22,7 @@ the data (SURVEY.md §6).
 from __future__ import annotations
 
 import time
-from typing import List, Optional, Sequence
+from typing import Dict, Optional, Sequence, Set
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,27 +53,35 @@ def lineage_path(out_dir: str) -> str:
     return f"{out_dir}/lineage"
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of its Hadoop FileSystem (any FS
+    URI) on the driver: no Spark job, no exception on a fresh dir."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return p.getFileSystem(conf).exists(p)
+
+
 def read_lineage(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
-    try:
-        return spark.read.schema(LINEAGE).parquet(lineage_path(out_dir))
-    except Exception:
+    path = lineage_path(out_dir)
+    if not _exists(spark, path):
         return None
+    return spark.read.schema(LINEAGE).parquet(path)
 
 
-def completed_keys(spark: SparkSession, out_dir: str, stage: str,
-                   run_id: Optional[str] = None) -> List[str]:
-    """Partition keys already recorded for a stage (across all runs —
-    idempotent re-runs skip work done by any previous run)."""
+def completed_keys(spark: SparkSession, out_dir: str) -> Dict[str, Set[str]]:
+    """{stage: partition keys already recorded} across all runs, from ONE
+    read of the lineage table — idempotent re-runs skip work done by any
+    previous run.  Callers read it once at the start of a run: a stage's
+    keys only grow through that same stage's own ``record``, which runs
+    after the stage has checked them."""
     lin = read_lineage(spark, out_dir)
     if lin is None:
-        return []
-    rows = (
-        lin.filter(F.col("stage") == stage)
-        .select("partition_key")
-        .distinct()
-        .collect()
-    )
-    return [r.partition_key for r in rows]
+        return {}
+    done: Dict[str, Set[str]] = {}
+    for r in lin.select("stage", "partition_key").distinct().collect():
+        done.setdefault(r.stage, set()).add(r.partition_key)
+    return done
 
 
 def record(
@@ -79,19 +91,27 @@ def record(
     entries: Sequence[tuple],
     run_id: str,
 ) -> None:
-    """entries: (partition_key, input_rows, output_rows, checksum, wall_ms)."""
+    """entries: (partition_key, input_rows, output_rows, checksum, wall_ms).
+
+    The rows are built on the driver as a pandas frame and shipped as an
+    Arrow local relation — no Python RDD, so no Python worker — and
+    appended as ONE part file.  ``ts`` is the driver's UTC clock, a
+    value rather than a per-run literal in the plan, so the write's
+    generated code is reused across runs."""
     if not entries:
         return
-    now = F.current_timestamp()
-    df = spark.createDataFrame(
+    import pandas as pd
+
+    now = pd.Timestamp.now(tz="UTC")
+    pdf = pd.DataFrame(
         [
-            (stage, str(k), int(i), int(o), str(c), int(w), run_id)
+            (stage, str(k), int(i), int(o), str(c), int(w), run_id, now)
             for (k, i, o, c, w) in entries
         ],
-        "stage string, partition_key string, input_rows long, output_rows long,"
-        " checksum string, wall_ms long, run_id string",
-    ).withColumn("ts", now)
-    df.write.mode("append").parquet(lineage_path(out_dir))
+        columns=LINEAGE.fieldNames(),
+    )
+    df = spark.createDataFrame(pdf, LINEAGE)
+    df.coalesce(1).write.mode("append").parquet(lineage_path(out_dir))
 
 
 def observe_bucket_metrics(df: DataFrame, buckets: Sequence[int],

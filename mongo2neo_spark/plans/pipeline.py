@@ -76,18 +76,20 @@ def run_pipeline(
         "triples": f"{out_dir}/triples",
         "lineage": lin.lineage_path(out_dir),
     }
-    _stage_extract(spark, input_source, paths, cfg, resume)
-    _stage_components(spark, paths, cfg, resume)
-    _stage_materialize(spark, paths, cfg, resume)
+    # one lineage read per run: a stage's keys only grow through its own
+    # record, which runs after the stage has checked them
+    done = lin.completed_keys(spark, out_dir) if resume else {}
+    _stage_extract(spark, input_source, paths, cfg, done.get("extract", set()))
+    _stage_components(spark, paths, cfg, done.get("components"))
+    _stage_materialize(spark, paths, cfg, done.get("materialize"))
     return paths
 
 
 # ---------------------------------------------------------------------------
 # stage 1: ingest + extract (bucket-granular resume)
 # ---------------------------------------------------------------------------
-def _stage_extract(spark, input_source, paths, cfg, resume) -> None:
+def _stage_extract(spark, input_source, paths, cfg, done) -> None:
     stage = "extract"
-    done = set(lin.completed_keys(spark, paths["lineage"].rsplit("/", 1)[0], stage)) if resume else set()
     all_buckets = {str(b) for b in range(cfg.n_buckets)}
     todo = sorted(all_buckets - done, key=int)
     if not todo:
@@ -118,11 +120,15 @@ def _stage_extract(spark, input_source, paths, cfg, resume) -> None:
         # salt exchange.
         strategy = cfg.dedup_strategy
         if strategy == "auto":
-            s = raw.limit(20_000).agg(
-                F.avg(F.length("text")).alias("t"),
-                F.avg(F.length("conv_id")).alias("k"),
-            ).first()
-            wide = s.t is not None and s.t > 4.0 * (float(s.k or 0) + 8.0)
+            # the sample's limit stays at the top of the plan (collected
+            # over Arrow in one job): a limit inside a generated stage
+            # names its row counter from a JVM-wide sequence, so that
+            # class would be new — and compiled again — on every run
+            s = raw.select(
+                F.length("text").alias("t"), F.length("conv_id").alias("k")
+            ).limit(20_000).toPandas()
+            # an empty sample's NaN compares False -> "shuffle"
+            wide = bool(s.t.mean() > 4.0 * (s.k.mean() + 8.0))
             strategy = "adaptive" if wide else "shuffle"
         if strategy == "adaptive":
             turns = ingest_mod.dedup_adaptive(raw)
@@ -174,10 +180,10 @@ def _stage_extract(spark, input_source, paths, cfg, resume) -> None:
 # ---------------------------------------------------------------------------
 # stage 2: link + canonicalize (global stage)
 # ---------------------------------------------------------------------------
-def _stage_components(spark, paths, cfg, resume) -> None:
+def _stage_components(spark, paths, cfg, done) -> None:
     stage = "components"
     out_root = paths["lineage"].rsplit("/", 1)[0]
-    if resume and lin.completed_keys(spark, out_root, stage):
+    if done:
         return
     with lin.StageTimer() as t:
         ments = extract_mod.mentions(spark.read.parquet(paths["extracted"]))
@@ -232,10 +238,10 @@ def _stage_components(spark, paths, cfg, resume) -> None:
 # ---------------------------------------------------------------------------
 # stage 3: materialize (global stage)
 # ---------------------------------------------------------------------------
-def _stage_materialize(spark, paths, cfg, resume) -> None:
+def _stage_materialize(spark, paths, cfg, done) -> None:
     stage = "materialize"
     out_root = paths["lineage"].rsplit("/", 1)[0]
-    if resume and lin.completed_keys(spark, out_root, stage):
+    if done:
         return
     with lin.StageTimer() as t:
         extracted = spark.read.parquet(paths["extracted"])

@@ -55,6 +55,14 @@ DEFAULT_CONFS = {
     # multi-query session — 5min keeps the block manager flat without
     # measurable overhead (a periodic System.gc on the driver only)
     "spark.cleaner.periodicGC.interval": "5min",
+    # keep generated code across runs: a cold KG pipeline run compiles
+    # 120-127 classes and a curation run 104-113 (CodegenMetrics), so
+    # the 100-entry default LRU evicts each class before the next run
+    # asks for it again — a warm run recompiled 91 of the KG test
+    # fixture's 123, paying Janino plus the JIT on fresh bytecode.  With
+    # 1024 (several pipelines' worth of small entries) a warm run
+    # compiles none.
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 

@@ -283,3 +283,22 @@ def test_curation_sampled_file_order_is_global_shuffle_order(spark, tmp_path):
         keys.extend(zip(pdf["shuffle_key"], pdf["doc_id"]))
     assert len(keys) > 1
     assert keys == sorted(keys)
+
+
+def test_curation_resume_reads_lineage_once(spark, curation_out, tmp_path,
+                                            monkeypatch):
+    """A resume=True run reads lineage once, at its start — both on a
+    fresh directory and on a completed one (the no-op re-run)."""
+    tmp, _paths, _cfg = curation_out
+    real, calls = lin.completed_keys, []
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(lin, "completed_keys", counting)
+    for run_id in ("once1", "once2"):
+        calls.clear()
+        run_curation(spark, str(tmp / "docs"), str(tmp_path / "out"),
+                     _full_cfg(run_id=run_id), resume=True)
+        assert len(calls) == 1, run_id

@@ -149,6 +149,17 @@ class TestTriangles:
         # EXTRA degrees: 10:2 11:2 12:3 13:1 20:1 21:2 22:1 30:1 31:1
         assert got == {1: 5, 2: 3, 3: 1}
 
+    def test_empty_edge_frame_returns_empty(self, spark):
+        # m=0 must not reach the venue legs (reduce over zero legs)
+        from mongo2neo_spark.operators.graph import triangle_counts
+
+        e = spark.createDataFrame([], "s1 bigint, s2 bigint")
+        out = triangle_counts(e)
+        assert out.count() == 0
+        assert [(f.name, f.dataType.simpleString())
+                for f in out.schema.fields] == [
+            ("node", "bigint"), ("n_triangles", "bigint")]
+
 
 class TestPagerank:
     def test_replica_equality_sf0001(self, spark):

@@ -8,6 +8,33 @@ from mongo2neo_spark.plans import lineage as lin
 from mongo2neo_spark.plans.pipeline import PipelineConfig, run_pipeline
 
 
+def _compiled_classes(spark):
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_second_run_reuses_generated_code(spark, small_rows, tmp_path):
+    """Generated classes survive from one run to the next: a per-run
+    literal in a plan, or a codegen cache smaller than one run's
+    classes, would make every run recompile them.  It is the module's
+    first test, so its first run generates the pipeline's classes
+    rather than finding them cached by the other tests' runs."""
+    spark.createDataFrame(fixtures.turns_to_pandas(small_rows)).write.parquet(
+        str(tmp_path / "in")
+    )
+    counts = []
+    for i in range(2):
+        before = _compiled_classes(spark)
+        run_pipeline(spark, str(tmp_path / "in"), str(tmp_path / f"out{i}"),
+                     PipelineConfig(n_buckets=8, run_id=f"cg{i}"))
+        counts.append(_compiled_classes(spark) - before)
+    # the second run must find every class cached: a per-run literal
+    # costs only a few classes, too few for a ratio to the first run's
+    # ~120 to catch
+    assert counts[0] > 0 and counts[1] == 0, counts
+
+
 @pytest.fixture(scope="module")
 def pipeline_out(spark, small_rows, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("pipe")
@@ -118,3 +145,21 @@ def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path):
         for r in spark.read.parquet(pb["triples"]).collect()
     )
     assert tri_a == tri_b
+
+
+def test_resume_reads_lineage_once(spark, pipeline_out, tmp_path, monkeypatch):
+    """A resume=True run reads lineage once, at its start — both on a
+    fresh directory and on a completed one (the no-op re-run)."""
+    tmp, _ = pipeline_out
+    real, calls = lin.completed_keys, []
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(lin, "completed_keys", counting)
+    for run_id in ("once1", "once2"):
+        calls.clear()
+        run_pipeline(spark, str(tmp / "in"), str(tmp_path / "out"),
+                     PipelineConfig(n_buckets=8, run_id=run_id))
+        assert len(calls) == 1, run_id
