@@ -103,16 +103,17 @@ def extract_turn_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# JVM-side extraction (default path): the U1/U2 rules are regular-language
+# JVM-side extraction (impl="jvm"): the U1/U2 rules are regular-language
 # + arithmetic, so the whole stage compiles into whole-stage codegen with
 # ZERO Python in the hot path.  regexp_extract_all gives the mention
 # surfaces in order; split(text, MENTION_RE, -1) gives the inter-mention
 # gaps (leading/trailing included), so span offsets are prefix sums of
 # the two length arrays and predicate detection is a filter over the
 # interior gaps.  Java and Python regex agree on this pattern for the
-# ASCII alphabet the rules target (\b, [A-Z], [A-Za-z0-9] are identical);
-# the Arrow UDF path below remains as the shared-spec fallback and the
-# jvm==arrow parity property is pinned by tests.
+# ASCII alphabet the rules target (\b, [A-Z], [A-Za-z0-9] are identical).
+# The default is the Arrow UDF path below (impl="arrow", measured faster
+# when every field is consumed, see extract()); the jvm==arrow parity
+# property is pinned by tests.
 # ---------------------------------------------------------------------------
 _MENTION_PATTERN = rules.MENTION_RE.pattern
 
@@ -220,58 +221,18 @@ def extract_jvm(turns: DataFrame) -> DataFrame:
     )
 
 
-def _empty_extract_struct():
-    """A typed all-empty EXTRACT_TYPE value, built JVM-side."""
-    return F.struct(
-        F.array().cast("array<int>").alias("m_start"),
-        F.array().cast("array<int>").alias("m_end"),
-        F.array().cast("array<string>").alias("m_surface"),
-        F.array().cast("array<string>").alias("m_norm"),
-        F.array().cast("array<string>").alias("m_kind"),
-        F.array().cast("array<int>").alias("t_subj"),
-        F.array().cast("array<string>").alias("t_pred"),
-        F.array().cast("array<int>").alias("t_obj"),
-    )
-
-
-def extract_arrow(turns: DataFrame, gate: bool = False) -> DataFrame:
+def extract_arrow(turns: DataFrame) -> DataFrame:
     """Arrow-batched path: one pandas-UDF island that runs the shared
     ``rules`` module verbatim (parity-by-construction with the
     pure-Python oracle); tests assert jvm == arrow on every fixture
-    corpus.
-
-    ``gate=True`` pre-filters with a sound JVM predicate before the
-    Arrow transfer: MENTION_RE can only match where an ASCII uppercase
-    letter exists, so ``rlike '[A-Z]'`` has no false negatives — rows
-    failing it get a typed empty struct without ever crossing into
-    Python (~30% of turns on the contract corpus skip the transfer).
-    Wrapping the UDF in ``when(gate, udf(...))`` would NOT help: Spark
-    extracts UDFs and evaluates them on the whole projected batch, so
-    the skip must be a plan branch.
-
-    Default OFF, by measurement: at 149k turns / local[32] the
-    two-branch union (double input pass + rlike on every row + 2x task
-    scheduling) costs more than the skipped 30% of Arrow transfer
-    (best-of-3: 0.88s ungated vs 1.11s gated).  The gate wins only when
-    the skipped fraction is large or rows are much wider than this
-    corpus's — it stays available for those shapes, parity-tested."""
-    if not gate:
-        return turns.select(
-            "conv_id", "turn_idx", "ts",
-            extract_turn_udf(F.col("text")).alias("ex"),
-        )
-    cand = F.coalesce(F.col("text"), F.lit("")).rlike("[A-Z]")
-    hit = turns.where(cand).select(
+    corpus."""
+    return turns.select(
         "conv_id", "turn_idx", "ts",
         extract_turn_udf(F.col("text")).alias("ex"),
     )
-    miss = turns.where(~cand).select(
-        "conv_id", "turn_idx", "ts", _empty_extract_struct().alias("ex")
-    )
-    return hit.unionByName(miss)
 
 
-def extract(turns: DataFrame, impl: str = "arrow", gate: bool = False) -> DataFrame:
+def extract(turns: DataFrame, impl: str = "arrow") -> DataFrame:
     """turns -> one row per turn with mention/triple arrays attached.
 
     Input should already be salted-repartitioned (operators.skew) so a
@@ -290,7 +251,7 @@ def extract(turns: DataFrame, impl: str = "arrow", gate: bool = False) -> DataFr
     if impl == "jvm":
         return extract_jvm(turns)
     if impl == "arrow":
-        return extract_arrow(turns, gate=gate)
+        return extract_arrow(turns)
     raise ValueError(f"unknown extract impl: {impl!r}")
 
 

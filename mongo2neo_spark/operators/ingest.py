@@ -23,8 +23,9 @@ def clean(df: DataFrame, roles: tuple | None = None) -> DataFrame:
     """P1 prune/cast + P2 validity filter + P4 role predicate (no dedup).
 
     Kept separate from :func:`dedup` so the pipeline can insert its own
-    fixed-width repartition between them — the dedup aggregate then runs
-    partition-locally on that exchange (one full-text shuffle total).
+    repartition on the dedup keys between them (AQE sizes its width) —
+    the dedup aggregate then runs partition-locally on that exchange
+    (one full-text shuffle total).
     """
     out = df.select(
         F.col("conv_id").cast("string").alias("conv_id"),

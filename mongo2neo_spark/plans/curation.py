@@ -132,8 +132,8 @@ def _stage_profile(spark, input_source, paths, cfg, done) -> None:
         obs, prof = lin.observe_bucket_metrics(
             prof, todo_ints, ["doc_id", "bucket"]
         )
-        m2nio.write_table(
-            prof, paths["profiled"], partition_by=["bucket"],
+        m2nio.write_partitioned(
+            prof, paths["profiled"], ["bucket"],
             options={"parquet.block.size": m2nio.INTERMEDIATE_ROW_GROUP_BYTES},
         )
     got = obs.get
@@ -163,8 +163,8 @@ def _global_stage(spark, paths, cfg, done, stage, produce,
     with lin.StageTimer() as t:
         df, n_in = produce()
         obs, df = lin.observe_table_metrics(df)
-        m2nio.write_table(
-            df, paths[_STAGE_OUT[stage]], partition_by=list(partition_by),
+        m2nio.write_partitioned(
+            df, paths[_STAGE_OUT[stage]], list(partition_by),
             options={"parquet.block.size": m2nio.INTERMEDIATE_ROW_GROUP_BYTES},
         )
     got = obs.get

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import LINEAGE
+from ..sources.io import hadoop_path
 
 STAGE_KEY = "__stage__"  # partition_key for single-partition (global) stages
 
@@ -56,10 +57,8 @@ def lineage_path(out_dir: str) -> str:
 def _exists(spark: SparkSession, path: str) -> bool:
     """Whether ``path`` exists, asked of its Hadoop FileSystem (any FS
     URI) on the driver: no Spark job, no exception on a fresh dir."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    return p.getFileSystem(conf).exists(p)
+    fs, p = hadoop_path(spark, path)
+    return fs.exists(p)
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:

@@ -32,6 +32,7 @@ from ..operators import ingest as ingest_mod
 from ..operators import link as link_mod
 from ..operators import materialize as mat_mod
 from ..operators import skew as skew_mod
+from ..schemas import COMPONENTS
 from ..sources import io as m2nio
 from . import lineage as lin
 
@@ -117,7 +118,14 @@ def _stage_extract(spark, input_source, paths, cfg, done) -> None:
         # the sampled text:key byte ratio.  Either way (conv_id,
         # turn_idx) is fine-grained, so a hot conversation spreads
         # across partitions — the K1 salting effect without a dedicated
-        # salt exchange.
+        # salt exchange.  The shuffle path's exchange has no fixed
+        # width: AQE coalesces it by bytes (capped by
+        # spark.sql.shuffle.partitions, and kept at >= defaultParallelism
+        # partitions once the data is big enough to fill the cores), so
+        # a small input feeds the extract UDF a few tasks rather than
+        # one per shuffle partition, each paying the Python worker's
+        # fixed setup cost.  The hash keys are the dedup keys, so the
+        # min(struct) aggregate stays partition-local.
         strategy = cfg.dedup_strategy
         if strategy == "auto":
             # the sample's limit stays at the top of the plan (collected
@@ -133,9 +141,8 @@ def _stage_extract(spark, input_source, paths, cfg, done) -> None:
         if strategy == "adaptive":
             turns = ingest_mod.dedup_adaptive(raw)
         else:
-            n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
             turns = ingest_mod.dedup(
-                raw.repartition(n_part, F.col("conv_id"), F.col("turn_idx"))
+                raw.repartition(F.col("conv_id"), F.col("turn_idx"))
             )
         # ONE write of the combined extraction table (flat mention/triple
         # arrays, one row per turn); mentions/raw_triples are derived
@@ -153,7 +160,8 @@ def _stage_extract(spark, input_source, paths, cfg, done) -> None:
         # right — it coalesces small buckets into few files at sandbox
         # scale AND splits a hot bucket across several write tasks at
         # 100 TB (the salt trick, done by the optimizer from runtime
-        # sizes).  Plain repartition-by-column is never AQE-resized.
+        # sizes).  AQE may coalesce a plain repartition-by-column, but
+        # never splits one, so only REBALANCE spreads a hot bucket.
         ex = ex.hint("rebalance", "bucket")
         # per-bucket lineage metrics ride the write job via observe() —
         # no second scan of the (largest) table just to count it.
@@ -163,8 +171,8 @@ def _stage_extract(spark, input_source, paths, cfg, done) -> None:
         # dynamic partition overwrite = idempotent per-bucket replace (S2);
         # small row groups keep the table splittable for the three
         # downstream scans regardless of how few files AQE produces
-        m2nio.write_table(
-            ex, paths["extracted"], partition_by=["bucket"],
+        m2nio.write_partitioned(
+            ex, paths["extracted"], ["bucket"],
             options={"parquet.block.size": m2nio.INTERMEDIATE_ROW_GROUP_BYTES},
         )
 
@@ -204,10 +212,8 @@ def _stage_components(spark, paths, cfg, done) -> None:
             import pandas as pd
 
             comp = spark.createDataFrame(
-                pd.DataFrame(comp_rows, columns=["norm", "entity_id"])
-                if comp_rows
-                else pd.DataFrame({"norm": pd.Series(dtype="object"),
-                                   "entity_id": pd.Series(dtype="int64")})
+                pd.DataFrame(comp_rows, columns=COMPONENTS.fieldNames()),
+                COMPONENTS,
             )
             obs, comp = lin.observe_table_metrics(comp)
             m2nio.write_table(comp, paths["components"])

@@ -66,17 +66,6 @@ DEFAULT_CONFS = {
 }
 
 
-def _core_count(master: str) -> int:
-    if master.startswith("local["):
-        inner = master[len("local[") : -1]
-        if inner != "*":
-            try:
-                return int(inner)
-            except ValueError:
-                pass
-    return os.cpu_count() or 8
-
-
 def get_spark(
     app_name: str = "mongo2neo_spark",
     master: str | None = None,
@@ -97,13 +86,10 @@ def get_spark(
     else:
         # >= 4x cores so AQE has room to coalesce (SURVEY.md §4)
         confs.setdefault("spark.sql.shuffle.partitions", "128")
-    # file scans: 128MB maxPartitionBytes is right at warehouse scale, but
-    # it packs a small (sandbox-scale) table into 1-4 scan tasks and
-    # serializes every map stage downstream of a read.  minPartitionNum
-    # keeps scans at least as wide as the machine without changing
-    # large-table behavior.
-    n_cores = _core_count(master)
-    confs.setdefault("spark.sql.files.minPartitionNum", str(2 * n_cores))
+    # file scans keep Spark's own split floor (leafNodeDefaultParallelism,
+    # the core count in local mode): a wider floor only multiplies the
+    # tasks of scan-fed Arrow-UDF stages, and each task pays a fixed
+    # Python-worker setup cost before its first row
     if extra_confs:
         confs.update(extra_confs)
     for k, v in confs.items():

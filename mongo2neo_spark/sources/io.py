@@ -53,7 +53,7 @@ def write_table(
     ``parquet.block.size`` for INTERMEDIATE tables: parquet scans split
     at row-group granularity, so a stage output written as a few large
     row groups caps every downstream scan's parallelism at the file
-    count no matter what minPartitionNum asks for).
+    count no matter how many splits the scan asks for).
     """
     if TABLE_FORMAT == "iceberg" and not _is_path(target):
         writer = df.writeTo(target)
@@ -82,6 +82,51 @@ INTERMEDIATE_ROW_GROUP_BYTES = 16 * 1024 * 1024
 
 def append_table(df: DataFrame, target: str) -> None:
     write_table(df, target, mode="append")
+
+
+def write_partitioned(
+    df: DataFrame,
+    target: str,
+    partition_by: Sequence[str],
+    options: Optional[dict] = None,
+) -> None:
+    """:func:`write_table` for a partitioned table that later stages read
+    back, kept readable when it holds no rows.
+
+    A partitioned write of zero rows leaves no part file, so a reader
+    has no schema to infer (``UNABLE_TO_INFER_SCHEMA``).  When a path
+    table has no partition directory after the write, one zero-row part
+    file carrying ``df``'s schema (partition columns included) is put at
+    its root; a later write that adds partitions removes it again, so
+    the two layouts never mix in one directory.  With no ``partition_by``
+    the write already leaves a schema-carrying part file, so this is
+    plain :func:`write_table`."""
+    write_table(df, target, partition_by=partition_by, options=options)
+    if TABLE_FORMAT == "iceberg" and not _is_path(target):
+        return
+    spark = df.sparkSession
+    fs, root = hadoop_path(spark, target)
+    entries = fs.listStatus(root)
+    names = [e.getPath().getName() for e in entries]
+    data = [e.getPath() for e, n in zip(entries, names)
+            if e.isFile() and not n.startswith(("_", "."))]
+    if any(e.isDirectory() and "=" in n for e, n in zip(entries, names)):
+        for p in data:
+            fs.delete(p, False)
+    elif not data:
+        # partition columns last, where a read of partition directories
+        # puts them
+        cols = [c for c in df.columns if c not in partition_by]
+        schema = df.select(*cols, *partition_by).schema
+        spark.createDataFrame([], schema).write.mode("append").parquet(target)
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — driver-side file
+    operations on any FS URI, with no Spark job."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return p.getFileSystem(conf), p
 
 
 def _is_path(s: str) -> bool:

@@ -302,3 +302,27 @@ def test_curation_resume_reads_lineage_once(spark, curation_out, tmp_path,
         run_curation(spark, str(tmp / "docs"), str(tmp_path / "out"),
                      _full_cfg(run_id=run_id), resume=True)
         assert len(calls) == 1, run_id
+
+
+@pytest.mark.parametrize("n_docs", [0, 1])
+def test_curation_tiny_input(spark, tmp_path, n_docs):
+    """An empty or one-document table runs every stage, the sample stage
+    included: a zero-row partitioned write leaves no part file, so each
+    stage must still find its upstream table's schema."""
+    spark.createDataFrame(
+        pd.DataFrame({"doc_id": [0], "text": [GOOD]}).head(n_docs),
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "docs"))
+    paths = run_curation(spark, str(tmp_path / "docs"), str(tmp_path / "out"),
+                         _full_cfg(run_id="tiny"))
+    for table in ("profiled", "exact", "neardup", "curated", "sampled"):
+        df = spark.read.parquet(paths[table])
+        assert df.count() == n_docs, table
+        assert {"doc_id", "text", "bucket", "quality"} <= set(df.columns)
+    got = lin.read_lineage(spark, str(tmp_path / "out")).collect()
+    prof = [r for r in got if r.stage == "profile"]
+    assert len(prof) == 4 and sum(r.output_rows for r in prof) == n_docs
+    stages = {r.stage: r for r in got if r.partition_key == lin.STAGE_KEY}
+    assert set(stages) == {"exact", "neardup", "filter", "sample"}
+    assert all(r.input_rows == 0 and r.output_rows == n_docs
+               for r in stages.values())

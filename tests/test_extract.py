@@ -132,42 +132,3 @@ def test_jvm_extract_fuzz_ascii(spark):
         )
 
     assert rows(extract.extract_jvm(df)) == rows(extract.extract_arrow(df))
-
-
-def test_gated_arrow_equals_ungated(spark, small_df):
-    """The [A-Z] pre-gate is sound: rows skipping the Arrow transfer get
-    exactly the empty struct the UDF would return, and gated output is
-    value-identical to the ungated path (incl. no-caps and empty texts,
-    which the fixture corpus and the edge list below both contain)."""
-    import pandas as pd
-
-    turns = ingest.ingest(small_df)
-
-    def rows(df_):
-        return sorted(
-            (r.conv_id, r.turn_idx,
-             tuple(r.ex.m_start), tuple(r.ex.m_surface),
-             tuple(r.ex.t_subj), tuple(r.ex.t_pred), tuple(r.ex.t_obj))
-            for r in df_.collect()
-        )
-
-    assert rows(extract.extract_arrow(turns, gate=True)) == rows(
-        extract.extract_arrow(turns, gate=False)
-    )
-
-    edge = spark.createDataFrame(
-        pd.DataFrame({
-            "conv_id": ["c"] * 4,
-            "turn_idx": range(4),
-            "ts": pd.to_datetime(["2024-01-01"] * 4),
-            "text": ["", "no caps at all", "Alice works at Acme Corp",
-                     "xB mid-word capital"],
-        })
-    )
-    assert rows(extract.extract_arrow(edge, gate=True)) == rows(
-        extract.extract_arrow(edge, gate=False)
-    )
-    # no-cap rows produce empty arrays (not nulls)
-    got = {r.turn_idx: r.ex for r in
-           extract.extract_arrow(edge, gate=True).collect()}
-    assert list(got[0].m_start) == [] and list(got[1].t_pred) == []

@@ -130,3 +130,24 @@ def test_read_table_branch_selection(iceberg_format):
     sp2 = _FakeSpark()
     m2nio.read_table(sp2, "/data/turns.parquet")
     assert sp2.log == [("parquet", "/data/turns.parquet")]
+
+
+def test_write_partitioned_keeps_an_empty_table_readable(spark, tmp_path):
+    """A zero-row partitioned write leaves a schema-only file at the
+    table root (partition columns last, as a partitioned read orders
+    them); a later write that adds partitions removes it, so the table
+    never mixes the two layouts."""
+    target = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, 0, "a"), (2, 1, "b")],
+                               "id long, bucket int, s string")
+    m2nio.write_partitioned(df.limit(0), target, ["bucket"])
+    empty = spark.read.parquet(target)
+    assert empty.count() == 0
+    assert empty.columns == ["id", "s", "bucket"]
+    assert dict(empty.dtypes)["bucket"] == "int"
+    m2nio.write_partitioned(df, target, ["bucket"])
+    full = spark.read.parquet(target)
+    assert full.columns == empty.columns
+    assert sorted(map(tuple, full.collect())) == [(1, "a", 0), (2, "b", 1)]
+    assert not [p for p in (tmp_path / "t").iterdir()
+                if p.is_file() and p.name.startswith("part-")]

@@ -163,3 +163,112 @@ def test_resume_reads_lineage_once(spark, pipeline_out, tmp_path, monkeypatch):
         run_pipeline(spark, str(tmp / "in"), str(tmp_path / "out"),
                      PipelineConfig(n_buckets=8, run_id=run_id))
         assert len(calls) == 1, run_id
+
+
+def _lineage_rows(spark, out_dir):
+    return {(r.stage, r.partition_key): (r.input_rows, r.output_rows, r.checksum)
+            for r in lin.read_lineage(spark, out_dir).collect()}
+
+
+@pytest.mark.parametrize("strategy", ["shuffle", "adaptive", "auto"])
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_tiny_input(spark, small_rows, tmp_path, strategy, n_rows):
+    """An empty or one-row transcript table runs every stage: a zero-row
+    partitioned write leaves no part file, so each stage must still find
+    its upstream table's schema."""
+    from mongo2neo_spark import schemas
+
+    row = next(r for r in small_rows if oracle.pipeline_triples([r]))
+    rows = [row][:n_rows]
+    spark.createDataFrame(
+        fixtures.turns_to_pandas(rows), schemas.TRANSCRIPTS
+    ).write.parquet(str(tmp_path / "in"))
+    paths = run_pipeline(
+        spark, str(tmp_path / "in"), str(tmp_path / "out"),
+        PipelineConfig(n_buckets=4, run_id="tiny", dedup_strategy=strategy),
+    )
+    ref = oracle.pipeline_triples(rows)
+    assert _triples(spark, paths) == ref and bool(ref) == bool(n_rows)
+    assert spark.read.parquet(paths["extracted"]).count() == n_rows
+    assert spark.read.parquet(paths["edges"]).count() == len(ref)
+    got = _lineage_rows(spark, str(tmp_path / "out"))
+    assert {s for s, _ in got} == {"extract", "components", "materialize"}
+    assert len(got) == 4 + 2
+    assert sum(o for (s, _), (_, o, _) in got.items() if s == "extract") == n_rows
+    assert got[("materialize", lin.STAGE_KEY)][1] == len(ref)
+
+
+def test_extract_exchange_has_no_fixed_width(spark, small_rows, tmp_path,
+                                             monkeypatch):
+    """The dedup exchange feeding the extract UDF is sized by AQE: a
+    partition count pinned to spark.sql.shuffle.partitions hands every
+    small input that many Python-UDF tasks, each paying the Python
+    worker's fixed setup cost."""
+    from mongo2neo_spark.sources import io as m2nio
+
+    spark.createDataFrame(fixtures.turns_to_pandas(small_rows)).write.parquet(
+        str(tmp_path / "in")
+    )
+    real, plans = m2nio.write_partitioned, []
+
+    def capture(df, target, *args, **kwargs):
+        if target.endswith("/extracted"):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, target, *args, **kwargs)
+
+    monkeypatch.setattr(m2nio, "write_partitioned", capture)
+    run_pipeline(spark, str(tmp_path / "in"), str(tmp_path / "out"),
+                 PipelineConfig(n_buckets=4, run_id="xw",
+                                dedup_strategy="shuffle"))
+    assert len(plans) == 1
+    assert "REPARTITION_BY_COL" in plans[0], plans[0]
+    assert "REPARTITION_BY_NUM" not in plans[0], plans[0]
+
+
+def test_resume_after_crash_between_write_and_lineage(
+        spark, pipeline_out, tmp_path, monkeypatch):
+    """A stage that dies after writing its table but before recording
+    lineage is redone on resume, and nothing before it is: the re-run
+    writes no extraction table and reproduces a clean run's tables and
+    per-stage lineage checksums."""
+    from mongo2neo_spark.sources import io as m2nio
+
+    tmp, clean = pipeline_out
+    out = str(tmp_path / "out")
+    real_record = lin.record
+
+    def crash_on_components(spark_, out_dir, stage, *args, **kwargs):
+        if stage == "components":
+            raise RuntimeError("injected crash")
+        return real_record(spark_, out_dir, stage, *args, **kwargs)
+
+    monkeypatch.setattr(lin, "record", crash_on_components)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, str(tmp / "in"), out,
+                     PipelineConfig(n_buckets=8, run_id="crash"))
+    assert spark.read.parquet(f"{out}/components").count() > 0
+    monkeypatch.setattr(lin, "record", real_record)
+
+    written = []
+    for name in ("write_table", "write_partitioned"):
+        real = getattr(m2nio, name)
+
+        def spy(df, target, *args, _real=real, **kwargs):
+            written.append(target.rsplit("/", 1)[-1])
+            return _real(df, target, *args, **kwargs)
+
+        monkeypatch.setattr(m2nio, name, spy)
+    paths = run_pipeline(spark, str(tmp / "in"), out,
+                         PipelineConfig(n_buckets=8, run_id="resume"))
+    assert "extracted" not in written and "components" in written, written
+
+    def edges(p):
+        return sorted(
+            (r.subj, r.pred, r.obj, r.weight,
+             tuple(sorted(map(tuple, r.provenance))))
+            for r in spark.read.parquet(p["edges"]).collect()
+        )
+
+    assert _triples(spark, paths) == _triples(spark, clean)
+    assert edges(paths) == edges(clean)
+    assert _lineage_rows(spark, out) == _lineage_rows(spark, str(tmp / "out"))
